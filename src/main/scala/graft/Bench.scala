@@ -20,12 +20,11 @@ import java.util.concurrent.atomic.AtomicInteger
   *    1900-byte budget (`queries_omitted` counts the rest, `full`
   *    points at the full file) so the tail still parses.
   *
-  * Spark job counts are recorded per query into the full JSON by
-  * DEFAULT (`jobs` = count from the run that produced the min time,
+  * Spark job counts are always recorded per query into the full JSON
+  * (`jobs` = count from the run that produced the min time,
   * `jobs_runs` = per-run counts alongside `runs`) — at fixture scale
   * iterative queries are job-count dominated, so this is the first
-  * regression signal (the ProfileQ device, here for free each round;
-  * opt OUT with `SPARK_GRAFT_JOBLOG=0`).
+  * regression signal (the ProfileQ device, here for free each round).
   */
 object Bench {
   /** (1-minute, 5-minute) loadavg, sampled now (0.0 if /proc is
@@ -97,8 +96,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobCount = new AtomicInteger(0)
-    val jobLog = !sys.env.get("SPARK_GRAFT_JOBLOG").contains("0")
-    if (jobLog) spark.sparkContext.addSparkListener(
+    spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           jobCount.incrementAndGet(); ()
@@ -124,7 +122,7 @@ object Bench {
       // listener events are delivered on the async bus thread: drain it
       // before reading/zeroing the counter, or a late onJobStart from
       // this run undercounts here and bleeds into the next run's zero
-      def drainListenerBus(): Unit = if (jobLog) try {
+      def drainListenerBus(): Unit = try {
         val bus = spark.sparkContext.getClass.getMethod("listenerBus")
           .invoke(spark.sparkContext)
         bus.getClass.getMethods
@@ -207,12 +205,11 @@ object Bench {
       "\"" + k + "\":[" + rs.map(fmt).mkString(",") + "]" }.mkString("{", ",", "}")
     val loadJson = results.map { case (k, _, _, _, _, l, _) =>
       "\"" + k + "\":" + fmt(l) }.mkString("{", ",", "}")
-    val jobsJson = if (jobLog) {
+    val jobsJson =
       results.map { case (k, _, _, j, _, _, _) =>
         "\"" + k + "\":" + j }.mkString(""","jobs":{""", ",", "}") +
       results.map { case (k, _, _, _, js, _, _) =>
         "\"" + k + "\":[" + js.mkString(",") + "]" }.mkString(""","jobs_runs":{""", ",", "}")
-    } else ""
     val fullLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qmap(results.map(r => r._1 -> r._2))},""" +
       s"""$stamps,"runs":$runsJson,"load":$loadJson$jobsJson}"""

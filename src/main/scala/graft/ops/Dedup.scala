@@ -1688,78 +1688,29 @@ object Dedup {
     * hot buckets' signatures, not the index. Returns the
     * (bucket, filesBefore) pairs it compacted.
     *
-    * The rewrite goes through a sibling temp dir and a per-bucket
-    * directory swap rather than a dynamic-partition overwrite: the
+    * The rewrite goes to `$path.merge` and commits through
+    * [[BucketSwap.swap]] rather than a dynamic-partition overwrite: the
     * source and destination are the same path, which Spark's insert
     * path (rightly) refuses. On a real deployment this swap is the
     * transactional commit a table format (Iceberg/Delta rewrite-files)
     * provides; the device — rewrite only over-threshold buckets, swap
     * atomically per bucket, readers keep a consistent view — is the same.
+    * An interrupted compaction is healed by [[BucketSwap.recover]] on the
+    * next entry and simply re-runs on the next maintenance cycle.
     */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
-  /** Heal an index left by a compaction interrupted mid-swap. The swap
-    * ordering in [[compactLshIndex]] guarantees every crash point leaves
-    * a recoverable state; this is the recovery:
-    *   - live bucket dir MISSING but its aside copy present (crash
-    *     between move-aside and move-in): restore the aside copy — the
-    *     pre-compaction data, still complete; the compaction simply
-    *     re-runs on the next maintenance cycle;
-    *   - live present and aside too (crash before the aside delete):
-    *     the live dir already holds the compacted data — drop the aside;
-    *   - a stale rewrite temp dir (crash mid-write): drop it.
-    * Returns the bucket ids whose live dirs were restored. A no-crash
-    * call costs two existence checks.
-    */
-  def recoverLshIndex(path: String): Seq[Int] = {
-    val aside = new java.io.File(s"$path.compact.aside")
-    val restored = scala.collection.mutable.ListBuffer[Int]()
-    if (aside.exists()) {
-      Option(aside.listFiles()).getOrElse(Array.empty).toSeq
-        .filter(d => d.isDirectory && d.getName.startsWith("bucket=")).foreach { d =>
-          val live = new java.io.File(s"$path/${d.getName}")
-          if (!live.exists()) {
-            java.nio.file.Files.move(d.toPath, live.toPath)
-            restored += d.getName.stripPrefix("bucket=").toInt
-          }
-        }
-      rmTree(aside)
-    }
-    rmTree(new java.io.File(s"$path.compact"))
-    restored.toSeq.sorted
-  }
-
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       maxFilesPerBucket: Int): Seq[(Int, Int)] = {
     require(maxFilesPerBucket >= 1, s"maxFilesPerBucket must be >= 1: $maxFilesPerBucket")
-    recoverLshIndex(path) // self-heal any interrupted previous swap first
+    BucketSwap.recover(path, "bucket") // self-heal any interrupted previous swap first
     val over = lshIndexFileCounts(path).filter(_._2 > maxFilesPerBucket).toSeq.sorted
     if (over.nonEmpty) {
-      val tmp = path + ".compact"
       val buckets = over.map(_._1)
       spark.read.parquet(path)
         .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
         // one partition per bucket → exactly one data file per bucket dir
         .repartition(buckets.size, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-      buckets.foreach { b =>
-        // Crash-safe ordering: rename the live bucket ASIDE (outside the
-        // index path, so partition discovery never sees it), move the
-        // compacted dir into place, delete the aside copy LAST — a
-        // failure at any step leaves either the old or the new bucket
-        // intact on disk (never neither), so an interrupted compaction
-        // is recoverable without replaying already-committed batches.
-        val dst = java.nio.file.Paths.get(s"$path/bucket=$b")
-        val old = java.nio.file.Paths.get(s"$tmp.aside/bucket=$b")
-        java.nio.file.Files.createDirectories(old.getParent)
-        java.nio.file.Files.move(dst, old)
-        java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/bucket=$b"), dst)
-        rmTree(old.toFile)
-      }
-      rmTree(new java.io.File(s"$tmp.aside"))
-      rmTree(new java.io.File(tmp))
+        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path.merge")
+      BucketSwap.swap(path, "bucket", buckets)
     }
     over
   }
@@ -1787,6 +1738,15 @@ object Dedup {
     * rider rewrites buckets holding more than `maxFilesPerBucket` data
     * files down to one, so the probe's directory listing stays O(buckets)
     * under continuous operation instead of O(batches × buckets).
+    *
+    * Crash/replay: the output append and the index append together are
+    * the index's [[BucketSwap.orderedAppend]], so a replayed batch id at
+    * or below the index's `_ingest_frontier` is absorbed and writes
+    * nothing (a restart from an empty checkpoint over the same index and
+    * output re-emits no row). The one window still at-least-once is a
+    * crash between the output append and the frontier advance: the batch
+    * replays and its output rows (and any index rows already written)
+    * land twice.
     */
   def streamingNovelty(spark: org.apache.spark.sql.SparkSession, chunks: String,
                        schema: org.apache.spark.sql.types.StructType,
@@ -1837,87 +1797,58 @@ object Dedup {
         // probing — otherwise the probe silently misses the moved-aside
         // bucket until the next maintenance cycle (no-crash cost: two
         // existence checks)
-        recoverLshIndex(indexPath)
+        BucketSwap.recover(indexPath, "bucket")
         // The fused earlier-candidate probe keys "earlier ingested" to
         // "smaller doc_id" (the x.doc_id < y.doc_id predicate below), so
-        // correctness DEPENDS on batches arriving in doc-id order. Assert
-        // that contract per batch instead of trusting it: the index
-        // carries its ingest frontier (max doc_id, stamped batch id) in a
-        // metadata file, and a NEW batch whose min doc_id does not exceed
-        // the frontier fails loudly rather than silently flipping
-        // duplicates to novel. A REPLAY of the stamped batch (foreachBatch
-        // is at-least-once: crash between index append and checkpoint
-        // commit) legitimately overlaps the frontier, so same-or-older
-        // batch ids skip the check.
-        val frontierFile = java.nio.file.Paths.get(s"$indexPath/_ingest_frontier")
-        val (recBatch, recMax) =
-          if (java.nio.file.Files.exists(frontierFile)) {
-            val parts = java.nio.file.Files.readString(frontierFile).trim.split(",")
-            (parts(0).toLong, parts(1).toLong)
-          } else (-1L, Long.MinValue)
-        val stats = dObs.row
-        val batchEmpty = stats.isNullAt(0)
-        if (!batchEmpty && batchId > recBatch)
-          require(stats.getLong(0) > recMax,
-            s"ingestion-order contract broken: batch $batchId min doc_id " +
-              s"${stats.getLong(0)} <= already-indexed max $recMax — the fused " +
-              "earlier-candidate probe assumes doc-id-ordered ingestion; " +
-              "re-ingest out-of-order data through a full rebuild instead")
-        // ONE probe join covers both the vs-index and the intra-batch
-        // comparison: ingestion order means "earlier" ≡ "smaller doc_id"
-        // on BOTH sides (the batch contract this op documents), so the
-        // index rows (bucket-pruned to the batch's buckets) and the
-        // batch's own band rows union into a single "earlier-candidate"
-        // side and one broadcast of the batch decides everything — half
-        // the joins/broadcast builds per micro-batch of the former
-        // two-join + union shape, same pairs by construction (same-bh
-        // rows share a bucket, so the bucket equality is a no-op on the
-        // intra part).
-        val probeCols = col("doc_id") +: col("band") +: col("bh") +: col("bucket") +:
-          (0 until nBands * rowsPerBand).map(i => col(s"s$i"))
-        val earlierSide: DataFrame =
-          if (new java.io.File(indexPath).exists()) {
-            val hit = bObs.row.getSeq[Int](0)
-            phase("probe+out")
-            s.read.parquet(indexPath)
-              .filter(col("bucket").isin(hit.map(Integer.valueOf): _*))
-              .select(probeCols: _*)
-              .unionByName(bandsB.select(probeCols: _*))
-          } else bandsB.select(probeCols: _*)
-        val dupOf = earlierSide.as("x")
-          .join(broadcast(bandsB.as("y")),
-            col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
-              col("x.bh") === col("y.bh") && col("x.doc_id") < col("y.doc_id"))
-          .filter(eq / lit(16.0) >= threshold)
-          .select(col("y.doc_id").as("id"), col("x.doc_id").as("earlier"))
-          .groupBy(col("id")).agg(min(col("earlier")).as("dup_of"))
-        // batch-sized output: collapse to one task/file per micro-batch
-        // (32 shuffle-width files of a 12k-row frame are pure overhead)
-        docs.select(col("doc_id"))
-          .join(dupOf, col("doc_id") === col("id"), "left")
-          .select(col("doc_id"), col("dup_of").isNull.as("novel"), col("dup_of"))
-          .coalesce(1)
-          .write.mode("append").parquet(outPath)
-        phase("append")
-        // consolidate before the append: partitionBy from 32 task
-        // partitions would scatter up to 32x16 sliver files per batch —
-        // one shuffle to bucket-aligned partitions writes one file per
-        // bucket per batch (the writeLshIndex layout), keeping the
-        // index's file count linear in batches, not tasks x buckets
-        bandsB.repartition(indexBuckets, col("bucket"))
-          .write.mode("append").partitionBy("bucket").parquet(indexPath)
-        // advance the ingest frontier AFTER the append (tmp + ATOMIC_MOVE,
-        // the watermark-persist device): a crash between append and this
-        // write leaves the old frontier, and the replayed batch id skips
-        // the order check above. Underscore-prefixed = invisible to the
-        // parquet reader's file index.
-        if (!batchEmpty) {
-          val tmpF = java.nio.file.Paths.get(s"$indexPath/_ingest_frontier.tmp")
-          java.nio.file.Files.writeString(tmpF,
-            s"$batchId,${math.max(recMax, stats.getLong(1))}")
-          java.nio.file.Files.move(tmpF, frontierFile,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        // correctness DEPENDS on batches arriving in doc-id order: the
+        // index's ordered append asserts that contract per batch and
+        // fails loudly rather than silently flipping duplicates to novel.
+        // A REPLAY of an appended batch id (foreachBatch is at-least-once)
+        // is absorbed whole: neither the output nor the index gains rows.
+        BucketSwap.orderedAppend(indexPath, batchId, dObs.row) {
+          // ONE probe join covers both the vs-index and the intra-batch
+          // comparison: ingestion order means "earlier" ≡ "smaller doc_id"
+          // on BOTH sides (the batch contract this op documents), so the
+          // index rows (bucket-pruned to the batch's buckets) and the
+          // batch's own band rows union into a single "earlier-candidate"
+          // side and one broadcast of the batch decides everything — half
+          // the joins/broadcast builds per micro-batch of the former
+          // two-join + union shape, same pairs by construction (same-bh
+          // rows share a bucket, so the bucket equality is a no-op on the
+          // intra part).
+          val probeCols = col("doc_id") +: col("band") +: col("bh") +: col("bucket") +:
+            (0 until nBands * rowsPerBand).map(i => col(s"s$i"))
+          val earlierSide: DataFrame =
+            if (new java.io.File(indexPath).exists()) {
+              val hit = bObs.row.getSeq[Int](0)
+              phase("probe+out")
+              s.read.parquet(indexPath)
+                .filter(col("bucket").isin(hit.map(Integer.valueOf): _*))
+                .select(probeCols: _*)
+                .unionByName(bandsB.select(probeCols: _*))
+            } else bandsB.select(probeCols: _*)
+          val dupOf = earlierSide.as("x")
+            .join(broadcast(bandsB.as("y")),
+              col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
+                col("x.bh") === col("y.bh") && col("x.doc_id") < col("y.doc_id"))
+            .filter(eq / lit(16.0) >= threshold)
+            .select(col("y.doc_id").as("id"), col("x.doc_id").as("earlier"))
+            .groupBy(col("id")).agg(min(col("earlier")).as("dup_of"))
+          // batch-sized output: collapse to one task/file per micro-batch
+          // (32 shuffle-width files of a 12k-row frame are pure overhead)
+          docs.select(col("doc_id"))
+            .join(dupOf, col("doc_id") === col("id"), "left")
+            .select(col("doc_id"), col("dup_of").isNull.as("novel"), col("dup_of"))
+            .coalesce(1)
+            .write.mode("append").parquet(outPath)
+          phase("append")
+          // consolidate before the append: partitionBy from 32 task
+          // partitions would scatter up to 32x16 sliver files per batch —
+          // one shuffle to bucket-aligned partitions writes one file per
+          // bucket per batch (the writeLshIndex layout), keeping the
+          // index's file count linear in batches, not tasks x buckets
+          bandsB.repartition(indexBuckets, col("bucket"))
+            .write.mode("append").partitionBy("bucket").parquet(indexPath)
         }
         docs.unpersist() // bandsB's checkpoint blocks are GC-reclaimed (ContextCleaner)
         // maintenance rider: bound the index's per-bucket file count so
@@ -2113,17 +2044,6 @@ object Dedup {
           col("id").as("cluster_size"), col("id").cast("int").as("cbucket"))
     }
 
-  /** Heal a cluster map left by a merge interrupted mid-swap — the
-    * [[recoverLshIndex]] ladder over `cbucket=` dirs and the `.merge`
-    * temp tree. An aside copy with a missing live dir is pre-merge data
-    * (restore it; the unadvanced `_cluster_frontier` makes the replayed
-    * batch re-merge); an aside next to a live dir means the swap
-    * committed (drop the aside); a stale temp tree is a dead rewrite.
-    * Returns the bucket ids restored. No-crash cost: two existence
-    * checks.
-    */
-  def recoverClusterMap(path: String): Seq[Int] = BucketSwap.recover(path, "cbucket")
-
   /** Merge ONE ingest batch into the persisted cluster map — the
     * incremental-maintenance path for [[writeClusterMap]]'s artifact,
     * closing for clusters the recompute gap [[streamingNovelty]] closed
@@ -2149,9 +2069,9 @@ object Dedup {
     *     y.doc_id` keeps "earlier", `distinct` folds replay overlap —
     *     COLLECTED directly (the delta-bounded pair set feeds the
     *     driver-side union-find below regardless);
-    *  3. append the batch's bands to the index, guarded by the index
-    *     `_ingest_frontier` (a replay never double-appends) and the
-    *     doc-id ingestion-order contract (fails loudly out of order);
+    *  3. append the batch's bands to the index through
+    *     [[BucketSwap.orderedAppend]] (a replay never double-appends;
+    *     out of doc-id order fails loudly);
     *  4. contract endpoints through the stored map — one IN-filtered
     *     pass over the map relation resolves stored clusters of the
     *     delta's endpoints (delta-sized result collected) — then
@@ -2161,7 +2081,7 @@ object Dedup {
     *     batch docs — decided by an in-plan anti-join, both sides
     *     delta-bounded), recount sizes bucket-locally (cluster-keyed
     *     bucketing keeps each cluster whole inside one bucket), swap
-    *     per bucket through the aside device;
+    *     per bucket through [[BucketSwap.swap]];
     *  6. advance `_cluster_frontier` (tmp + ATOMIC_MOVE) LAST.
     *
     * Crash/replay: a batch id at or below the frontier is absorbed
@@ -2173,29 +2093,11 @@ object Dedup {
     * `dedup_cluster_maintenance`'s oracle is the full rebuild, so the
     * correctness gate proves incremental ≡ from-scratch.
     */
-  /** Env-guarded step timing for the maintenance paths (measure-first
-    * observability, not a feature): `SPARK_GRAFT_MAINT_TIMING=1` prints
-    * per-step wall seconds to stderr. Zero cost when unset. */
-  private[graft] val maintTiming = sys.env.get("SPARK_GRAFT_MAINT_TIMING").contains("1")
-  private[graft] def timed[A](step: String)(body: => A): A =
-    if (!maintTiming) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      val n = r match {
-        case df: DataFrame => s"  rows=${df.count()}"
-        case arr: Array[_] => s"  n=${arr.length}"
-        case _             => ""
-      }
-      System.err.println(f"    [maint] $step%-22s ${(System.nanoTime() - t0) / 1e9}%.3fs$n")
-      r
-    }
-
   def maintainClusterMap(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, mapPath: String, batch: DataFrame,
                          threshold: Double, batchId: Long): Boolean = {
-    recoverClusterMap(mapPath)
-    recoverLshIndex(indexPath)
+    BucketSwap.recover(mapPath, "cbucket")
+    BucketSwap.recover(indexPath, "bucket")
     val (last, _) = BucketSwap.readFrontier(mapPath, "_cluster_frontier")
     if (batchId <= last) return false
     // a maintenance batch is micro-batch-sized: the batch-width device
@@ -2220,7 +2122,7 @@ object Dedup {
         .withColumn("bucket",
           pmod(PortableHash.tokenHash(col("bh")), lit(indexBuckets)).cast("int")),
       collect_set(col("bucket")).as("hit"))
-    val bands = timed("bands") { hObs.df.localCheckpoint() }
+    val bands = hObs.df.localCheckpoint()
     val nPerms = nBands * rowsPerBand
     val probeCols = col("doc_id") +: col("band") +: col("bh") +: col("bucket") +:
       (0 until nPerms).map(i => col(s"s$i"))
@@ -2232,7 +2134,7 @@ object Dedup {
       .exists(d => d.isDirectory && d.getName.startsWith("bucket="))
     val earlier =
       if (indexHasData) {
-        val hit = timed("hit-buckets") { hObs.row.getSeq[Int](0) }
+        val hit = hObs.row.getSeq[Int](0)
         spark.read.parquet(indexPath)
           .filter(col("bucket").isin(hit.map(Integer.valueOf): _*))
           .select(probeCols: _*)
@@ -2246,33 +2148,18 @@ object Dedup {
     // pairs-checkpoint / endpoint-resolve-checkpoint / contract-collect
     // job chain (plus its two broadcast builds) collapses into plain
     // driver arithmetic below
-    val pairsArr = timed("probe-pairs") {
-      earlier.as("x")
-        .join(broadcast(bands.as("y")),
-          col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
-            col("x.bh") === col("y.bh") && col("x.doc_id") < col("y.doc_id"))
-        .filter(eq / lit(nPerms.toDouble) >= threshold)
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-        .distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
+    val pairsArr = earlier.as("x")
+      .join(broadcast(bands.as("y")),
+        col("x.bucket") === col("y.bucket") && col("x.band") === col("y.band") &&
+          col("x.bh") === col("y.bh") && col("x.doc_id") < col("y.doc_id"))
+      .filter(eq / lit(nPerms.toDouble) >= threshold)
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+      .distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
 
-    timed("index-append") {
-      val (recBatch, recMax) = BucketSwap.readFrontier(indexPath, "_ingest_frontier")
-      if (batchId > recBatch) {
-        val stats = bObs.row
-        if (!stats.isNullAt(0)) {
-          require(stats.getLong(0) > recMax,
-            s"ingestion-order contract broken: batch $batchId min doc_id " +
-              s"${stats.getLong(0)} <= already-indexed max $recMax — cluster " +
-              "maintenance assumes doc-id-ordered ingestion; re-ingest " +
-              "out-of-order data through a full rebuild instead")
-          bands.repartition(indexBuckets, col("bucket"))
-            .write.mode("append").partitionBy("bucket").parquet(indexPath)
-          BucketSwap.writeFrontier(indexPath, "_ingest_frontier", batchId,
-            math.max(recMax, stats.getLong(1)))
-        }
-      }
+    BucketSwap.orderedAppend(indexPath, batchId, bObs.row) {
+      bands.repartition(indexBuckets, col("bucket"))
+        .write.mode("append").partitionBy("bucket").parquet(indexPath)
     }
 
     // ONE map relation serves the whole merge (endpoint resolution AND
@@ -2285,13 +2172,12 @@ object Dedup {
     // delta-sized result is collected for the driver-side contraction.
     // Unresolved endpoints represent themselves (getOrElse).
     val endpoints = pairsArr.flatMap(p => Seq(p._1, p._2)).distinct
-    val repsMap: Map[Long, Long] = timed("endpoint-resolve") {
+    val repsMap: Map[Long, Long] =
       if (endpoints.isEmpty) Map.empty
       else mapRel
         .filter(col("doc_id").isin(endpoints.map(java.lang.Long.valueOf): _*))
         .select(col("doc_id"), col("cluster"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
     // CC on the CONTRACTED graph runs on the DRIVER (iteration-altitude
     // rule): the edge set is delta-bounded and already collected, while
     // a distributed CC pays seconds of durable-checkpoint machinery per
@@ -2321,7 +2207,7 @@ object Dedup {
         edgesArr.flatMap { case (a, b) => Seq(a, b) }.distinct.map(n => n -> find(n))
       }
 
-    if (relabels.nonEmpty) timed("map-rewrite") {
+    if (relabels.nonEmpty) {
       val nodes = relabels.map(_._1)
       val touched = relabels.flatMap { case (n, l) =>
         Seq((n % mapBuckets).toInt, (l % mapBuckets).toInt) }.distinct.sorted.toSeq
@@ -2353,11 +2239,9 @@ object Dedup {
           count(lit(1)).over(Window.partitionBy(col("cluster"))))
         .select(col("doc_id"), col("cluster"), col("cluster_size"))
         .withColumn("cbucket", mapBucketCol(col("cluster")))
-      timed("rewrite-write") {
-        out.repartition(math.max(1, touched.size), col("cbucket"))
-          .write.mode("overwrite").partitionBy("cbucket").parquet(s"$mapPath.merge")
-      }
-      timed("rewrite-swap") { BucketSwap.swap(mapPath, "cbucket", touched) }
+      out.repartition(math.max(1, touched.size), col("cbucket"))
+        .write.mode("overwrite").partitionBy("cbucket").parquet(s"$mapPath.merge")
+      BucketSwap.swap(mapPath, "cbucket", touched)
     }
     BucketSwap.writeFrontier(mapPath, "_cluster_frontier", batchId, 0L)
     }

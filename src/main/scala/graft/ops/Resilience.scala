@@ -2,107 +2,12 @@ package graft.ops
 
 import scala.concurrent.duration._
 
-/** Error taxonomy, retry with backoff, and circuit breaker — the
-  * reference's operational resilience layer (reference:
-  * error/ErrorHandler.scala:89-233 classify, :239-292 retry, :297-372
-  * breaker) as pure, deterministic functions wrapping sink-side work
-  * (Spark's own task retry covers the compute side via
-  * `spark.task.maxFailures`).
+/** Health rules of the reference's operational layer, as pure
+  * predicates. Recovery itself needs no retry wrapper here: Spark's task
+  * retry covers the compute side and the sinks are idempotent (a
+  * replayed batch rewrites the same rows — `StreamToJdbcSpec` pins it).
   */
 object Resilience {
-
-  sealed trait ErrorClass
-  case object Retryable extends ErrorClass
-  case object NonRetryable extends ErrorClass
-  case object Fatal extends ErrorClass
-
-  /** MySQL errno classification (reference ErrorHandler.scala:104-139):
-    * 1040 too many connections, 2006/2013 server gone/lost — retryable;
-    * 1062 duplicate key — non-retryable (idempotent upsert absorbs it);
-    * 1045 access denied, 1049 unknown db, 1146 unknown table — fatal.
-    */
-  def classifyMySqlErrno(errno: Int): ErrorClass = errno match {
-    case 1040 | 2006 | 2013 => Retryable
-    case 1062 => NonRetryable
-    case 1045 | 1049 | 1146 => Fatal
-    case _ => NonRetryable
-  }
-
-  def classify(t: Throwable): ErrorClass = t match {
-    case _: java.net.SocketTimeoutException | _: java.net.ConnectException |
-         _: java.io.InterruptedIOException => Retryable
-    case _: java.sql.SQLTransientException => Retryable
-    case _: java.sql.SQLNonTransientException => Fatal
-    case _: IllegalArgumentException => NonRetryable
-    case _ => NonRetryable
-  }
-
-  /** Exponential backoff: base · 2^attempt · (1 + jitter), capped at
-    * 30 s (reference ErrorHandler.scala:284-291). Jitter is an explicit
-    * parameter for determinism/testability.
-    */
-  def backoff(attempt: Int, base: FiniteDuration = 100.millis, jitter: Double = 0.0): FiniteDuration = {
-    val raw = base.toMillis.toDouble * math.pow(2.0, attempt.toDouble) * (1.0 + jitter)
-    math.min(raw, 30000.0).millis
-  }
-
-  /** Retry retryable failures up to maxRetries with backoff (the sleep is
-    * injectable for tests).
-    */
-  def withRetry[T](maxRetries: Int, sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis))
-                  (body: => T): T = {
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case t: Throwable if classify(t) == Retryable && attempt < maxRetries =>
-          sleep(backoff(attempt)); attempt += 1
-        case t: Throwable => throw t
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** Circuit breaker: Closed → Open after `failureThreshold` consecutive
-    * failures; Open → HalfOpen after `resetTimeout`; HalfOpen success →
-    * Closed, failure → Open. Time is injected (no wall-clock in tests).
-    * Reference: ErrorHandler.scala:297-372 (5-failure breaker, half-open
-    * probe).
-    */
-  final class CircuitBreaker(failureThreshold: Int = 5, resetTimeout: FiniteDuration = 30.seconds,
-                             now: () => Long = () => System.nanoTime()) {
-    sealed trait State
-    case object Closed extends State
-    case object Open extends State
-    case object HalfOpen extends State
-
-    private var failures = 0
-    private var openedAt = 0L
-    private var st: State = Closed
-
-    // synchronized: one breaker instance is shared by the JVM's task
-    // threads in foreachPartition — unsynchronized increments would race
-    // and can keep `failures` below threshold forever
-    def state: State = synchronized {
-      if (st == Open && now() - openedAt >= resetTimeout.toNanos) st = HalfOpen
-      st
-    }
-
-    def allowRequest: Boolean = state != Open
-
-    def onSuccess(): Unit = synchronized { failures = 0; st = Closed }
-
-    def onFailure(): Unit = synchronized {
-      failures += 1
-      if (st == HalfOpen || failures >= failureThreshold) { st = Open; openedAt = now() }
-    }
-
-    def call[T](body: => T): T = {
-      if (!allowRequest) throw new IllegalStateException("circuit open")
-      try { val r = body; onSuccess(); r }
-      catch { case t: Throwable => onFailure(); throw t }
-    }
-  }
 
   /** Health rules over streaming progress (reference:
     * health/HealthCheck.scala:13-165 — lag > 5 min, error rate > 5 %,

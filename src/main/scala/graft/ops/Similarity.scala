@@ -1623,13 +1623,13 @@ object Similarity {
     * bucket-level rewrite needs no per-anchor bookkeeping.
     *
     * Crash/replay mirrors the cluster map: `_knn_frontier` (advanced
-    * LAST) absorbs replayed batch ids; the vector append is guarded by
-    * the vector table's own `_ingest_frontier` plus the vec-id
-    * ingestion-order contract (fails loudly out of order); a crash
-    * between append and graph commit replays cleanly — the scored pass
-    * recomputes the same candidates, `distinct` folds rows already
-    * merged, and [[BucketSwap.recover]] heals a half-swap. Returns true
-    * when merged, false when absorbed. Oracle of
+    * LAST) absorbs replayed batch ids; the vector append is the vector
+    * table's [[BucketSwap.orderedAppend]] (its own `_ingest_frontier`
+    * plus the vec-id ingestion-order contract, failing loudly out of
+    * order); a crash between append and graph commit replays cleanly —
+    * the scored pass recomputes the same candidates, `distinct` folds
+    * rows already merged, and [[BucketSwap.recover]] heals a half-swap.
+    * Returns true when merged, false when absorbed. Oracle of
     * `emb_knn_maintenance` = the from-scratch rebuild, so the gate
     * proves incremental ≡ rebuild.
     */
@@ -1652,20 +1652,9 @@ object Similarity {
     // pass then reads one consistent table covering old + batch
     // (intra-batch pairs included; the candidate relation below is lazy
     // and only executes after this commit)
-    val (vb, vMax) = BucketSwap.readFrontier(vecPath, "_ingest_frontier")
-    if (batchId > vb) {
-      val stats = bObs.row
-      if (!stats.isNullAt(0)) {
-        require(stats.getLong(0) > vMax,
-          s"ingestion-order contract broken: batch $batchId min vec_id " +
-            s"${stats.getLong(0)} <= already-ingested max $vMax — kNN " +
-            "maintenance assumes vec-id-ordered ingestion; re-ingest " +
-            "out-of-order data through a full rebuild instead")
-        batch.select(col("vec_id"), col("embedding"))
-          .coalesce(1).write.mode("append").parquet(vecPath)
-        BucketSwap.writeFrontier(vecPath, "_ingest_frontier", batchId,
-          math.max(vMax, stats.getLong(1)))
-      }
+    BucketSwap.orderedAppend(vecPath, batchId, bObs.row) {
+      batch.select(col("vec_id"), col("embedding"))
+        .coalesce(1).write.mode("append").parquet(vecPath)
     }
 
     val stored = prepared(spark.read.parquet(vecPath))
@@ -1943,20 +1932,9 @@ object Similarity {
 
     // guarded append of the batch's cell assignments (the vector-table
     // append of the exact path, in the cell-partitioned layout)
-    val (vb, vMax) = BucketSwap.readFrontier(cellsPath, "_ingest_frontier")
-    if (batchId > vb) {
-      val stats = bObs.row
-      if (!stats.isNullAt(0)) {
-        require(stats.getLong(0) > vMax,
-          s"ingestion-order contract broken: batch $batchId min vec_id " +
-            s"${stats.getLong(0)} <= already-ingested max $vMax — kNN " +
-            "maintenance assumes vec-id-ordered ingestion; re-ingest " +
-            "out-of-order data through a full rebuild instead")
-        assignCells(bPrep, cent)
-          .coalesce(1).write.mode("append").partitionBy("cell").parquet(cellsPath)
-        BucketSwap.writeFrontier(cellsPath, "_ingest_frontier", batchId,
-          math.max(vMax, stats.getLong(1)))
-      }
+    BucketSwap.orderedAppend(cellsPath, batchId, bObs.row) {
+      assignCells(bPrep, cent)
+        .coalesce(1).write.mode("append").partitionBy("cell").parquet(cellsPath)
     }
 
     // probe: the nprobe nearest cells per batch vector (probeCells'

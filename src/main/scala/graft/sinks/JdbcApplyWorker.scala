@@ -18,7 +18,8 @@ import java.sql.{Connection, DriverManager}
   * statements per partition, addBatch/executeBatch at `batchSize`.
   *
   * Idempotent by construction — replaying the same batch rewrites the
-  * same rows:
+  * same rows, also after a failure partway through it (committed chunks
+  * are rewritten, the failed chunk was rolled back):
   *   - op ≠ 'D': UPDATE, and INSERT only when no row matched (the
   *     try-update-else-insert upsert — portable to any JDBC target;
   *     MySQL/StarRocks deployments swap in their native upsert SQL from
@@ -103,6 +104,13 @@ object JdbcApplyWorker {
         }
         conn.commit()
       }
+    } catch {
+      case t: Throwable =>
+        // end the open chunk's transaction before the task fails: a
+        // connection closed mid-transaction can keep its row locks (Derby
+        // refuses the close), and the replay of this batch would block on them
+        try conn.rollback() catch { case e: java.sql.SQLException => t.addSuppressed(e) }
+        throw t
     } finally { del.close(); ins.close(); upd.close() }
   }
 }

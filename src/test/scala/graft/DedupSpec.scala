@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{BucketSwap, Dedup}
 import org.apache.spark.sql.DataFrame
 
 /** Dedup operator laws on a hand-built corpus: identical docs collide on
@@ -439,26 +439,56 @@ class DedupSpec extends SparkSpec {
       s"expected the ingest-frontier require to fire, got: $ex")
   }
 
-  test("novelty-index compaction: per-bucket file count stays bounded, results and content unchanged") {
+  /** `docs` split by doc-id rank into `n` one-file chunks under
+    * `$root/chunks` with increasing mod times (FileStreamSource picks by
+    * mod time) → `n` doc-id-ordered micro-batches. */
+  private def orderedChunks(docs: DataFrame, root: String, n: Int): String = {
     import org.apache.spark.sql.functions._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    // 6 doc-id-ordered chunk files → 6 micro-batches
-    val root = Scratch.dir("graft-compact-spec")
     val chunks = s"$root/chunks"
     new java.io.File(chunks).mkdirs()
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
     val ranked = docs.withColumn("rn", row_number().over(w)).persist()
-    val n = ranked.count(); val per = (n + 5) / 6
-    (0 until 6).foreach { i =>
+    val per = (ranked.count() + n - 1) / n
+    val base = System.currentTimeMillis() - 3600L * 1000L
+    (0 until n).foreach { i =>
       ranked.filter(col("rn") > i * per && col("rn") <= (i + 1) * per).drop("rn")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/tmp$i")
       val part = new java.io.File(s"$root/tmp$i").listFiles()
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$chunks/chunk_$i.parquet"))
+      new java.io.File(s"$chunks/chunk_$i.parquet").setLastModified(base + i * 1000L)
     }
     ranked.unpersist()
+    chunks
+  }
+
+  private def fixtureDocs: DataFrame =
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
+
+  test("streaming novelty: a from-zero replay over the same index and output is absorbed") {
+    val root = Scratch.dir("graft-replay-spec")
+    val chunks = orderedChunks(fixtureDocs, root, 4)
+    val schema = spark.read.parquet(chunks).schema
+    def run(ckpt: String): (Seq[String], Seq[String]) = {
+      Dedup.streamingNovelty(spark, chunks, schema,
+        s"$root/index", s"$root/out", s"$root/$ckpt", 0.5)
+      (spark.read.parquet(s"$root/out").orderBy("doc_id").collect().map(_.toString).toSeq,
+        Dedup.indexContentAudit(spark, s"$root/index").collect().map(_.toString).toSeq)
+    }
+    val (out, content) = run("ckpt")
+    assert(out.size == fixtureDocs.count(), "every document gets exactly one verdict")
+    // a fresh checkpoint re-delivers every chunk under batch ids 0..3, all
+    // at or below the index's ingest frontier: nothing may be re-appended
+    val (outReplay, contentReplay) = run("ckpt2")
+    assert(outReplay == out, s"replay changed the output: ${outReplay.size} vs ${out.size} rows")
+    assert(contentReplay == content, "replay changed the index content")
+  }
+
+  test("novelty-index compaction: per-bucket file count stays bounded, results and content unchanged") {
+    // 6 doc-id-ordered chunk files → 6 micro-batches
+    val root = Scratch.dir("graft-compact-spec")
+    val chunks = orderedChunks(fixtureDocs, root, 6)
     val schema = spark.read.parquet(chunks).schema
     def run(tag: String, every: Int, maxFiles: Int): (Seq[String], Map[Int, Int], Seq[String]) = {
       val d = s"$root/$tag"
@@ -491,28 +521,28 @@ class DedupSpec extends SparkSpec {
     val buckets = Dedup.lshIndexFileCounts(idx).keys.toSeq.sorted
     val (b0, b1) = (buckets.head, buckets(1))
     // crash point A: bucket b0 moved aside, compacted copy never landed
-    val aside = new java.io.File(s"$idx.compact.aside"); aside.mkdirs()
+    val aside = new java.io.File(s"$idx.merge.aside"); aside.mkdirs()
     java.nio.file.Files.move(
       java.nio.file.Paths.get(s"$idx/bucket=$b0"),
-      java.nio.file.Paths.get(s"$idx.compact.aside/bucket=$b0"))
+      java.nio.file.Paths.get(s"$idx.merge.aside/bucket=$b0"))
     // crash point B: bucket b1 swapped in, its aside copy not yet deleted
     // (stage a duplicate aside dir with a sentinel file)
-    val staleB = new java.io.File(s"$idx.compact.aside/bucket=$b1"); staleB.mkdirs()
+    val staleB = new java.io.File(s"$idx.merge.aside/bucket=$b1"); staleB.mkdirs()
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$idx.compact.aside/bucket=$b1/stale.parquet"), "x")
+      java.nio.file.Paths.get(s"$idx.merge.aside/bucket=$b1/stale.parquet"), "x")
     // crash point C: a half-written rewrite temp dir
-    val tmp = new java.io.File(s"$idx.compact/bucket=$b0"); tmp.mkdirs()
+    val tmp = new java.io.File(s"$idx.merge/bucket=$b0"); tmp.mkdirs()
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$idx.compact/bucket=$b0/partial.parquet"), "x")
+      java.nio.file.Paths.get(s"$idx.merge/bucket=$b0/partial.parquet"), "x")
 
-    val restored = Dedup.recoverLshIndex(idx)
+    val restored = BucketSwap.recover(idx, "bucket")
     assert(restored == Seq(b0), s"expected only bucket $b0 restored: $restored")
-    assert(!new java.io.File(s"$idx.compact.aside").exists())
-    assert(!new java.io.File(s"$idx.compact").exists())
+    assert(!new java.io.File(s"$idx.merge.aside").exists())
+    assert(!new java.io.File(s"$idx.merge").exists())
     val after = Dedup.indexContentAudit(spark, idx).collect().map(_.toString).toSeq
     assert(after == before, "recovered index content differs from pre-crash content")
     // idempotent on a healthy index
-    assert(Dedup.recoverLshIndex(idx).isEmpty)
+    assert(BucketSwap.recover(idx, "bucket").isEmpty)
   }
 
   test("shingle sweep: planted pairs verify at every k, shingle mass shrinks as k grows") {
@@ -596,9 +626,9 @@ class DedupSpec extends SparkSpec {
     val aside = java.nio.file.Paths.get(s"$map.merge.aside/${bucketDir.getName}")
     java.nio.file.Files.createDirectories(aside.getParent)
     java.nio.file.Files.move(bucketDir.toPath, aside)
-    assert(Dedup.recoverClusterMap(map) == Seq(bId), "recovery must restore the aside bucket")
+    assert(BucketSwap.recover(map, "cbucket") == Seq(bId), "recovery must restore the aside bucket")
     assert(snap() == merged, "healed map must equal the committed state")
-    assert(Dedup.recoverClusterMap(map).isEmpty, "a healed map recovers nothing")
+    assert(BucketSwap.recover(map, "cbucket").isEmpty, "a healed map recovers nothing")
     graft.ops.Caches.releaseCaches(); spark.catalog.clearCache()
   }
 }

@@ -1,74 +1,12 @@
 package graft
 
-import graft.ops.Resilience
 import graft.ops.Resilience._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.concurrent.duration._
 
-/** Pure-function resilience layer (no Spark needed). */
+/** Health rules over a metrics snapshot (no Spark needed). */
 class ResilienceSpec extends AnyFunSuite {
-
-  test("MySQL errno taxonomy matches the reference classification") {
-    assert(classifyMySqlErrno(1040) == Retryable)   // too many connections
-    assert(classifyMySqlErrno(2006) == Retryable)   // server gone
-    assert(classifyMySqlErrno(2013) == Retryable)   // lost connection
-    assert(classifyMySqlErrno(1062) == NonRetryable) // duplicate key
-    assert(classifyMySqlErrno(1045) == Fatal)       // access denied
-    assert(classifyMySqlErrno(1146) == Fatal)       // unknown table
-  }
-
-  test("backoff doubles per attempt and caps at 30s") {
-    assert(backoff(0, 100.millis) == 100.millis)
-    assert(backoff(1, 100.millis) == 200.millis)
-    assert(backoff(4, 100.millis) == 1600.millis)
-    assert(backoff(20, 100.millis) == 30000.millis)
-    assert(backoff(2, 100.millis, jitter = 0.5) == 600.millis)
-  }
-
-  test("withRetry retries retryable errors then succeeds") {
-    var calls = 0
-    val slept = Seq.newBuilder[FiniteDuration]
-    val r = withRetry(maxRetries = 5, sleep = slept += _) {
-      calls += 1
-      if (calls < 3) throw new java.net.ConnectException("refused")
-      "ok"
-    }
-    assert(r == "ok" && calls == 3)
-    assert(slept.result() == Seq(100.millis, 200.millis))
-  }
-
-  test("withRetry does not retry non-retryable errors") {
-    var calls = 0
-    intercept[IllegalArgumentException] {
-      withRetry(maxRetries = 5, sleep = _ => ()) { calls += 1; throw new IllegalArgumentException }
-    }
-    assert(calls == 1)
-  }
-
-  test("circuit breaker opens after threshold, half-opens after timeout, closes on success") {
-    var clock = 0L
-    val cb = new CircuitBreaker(failureThreshold = 3, resetTimeout = 10.nanos, now = () => clock)
-    def fail(): Unit = intercept[RuntimeException](cb.call(throw new RuntimeException("x")))
-    fail(); fail()
-    assert(cb.allowRequest)
-    fail()
-    assert(!cb.allowRequest) // open
-    clock = 11
-    assert(cb.allowRequest) // half-open
-    assert(cb.call("ok") == "ok")
-    assert(cb.state.toString == "Closed")
-  }
-
-  test("half-open failure re-opens immediately") {
-    var clock = 0L
-    val cb = new CircuitBreaker(failureThreshold = 3, resetTimeout = 10.nanos, now = () => clock)
-    (1 to 3).foreach(_ => intercept[RuntimeException](cb.call(throw new RuntimeException)))
-    clock = 11
-    assert(cb.allowRequest) // half-open probe allowed
-    intercept[RuntimeException](cb.call(throw new RuntimeException))
-    assert(!cb.allowRequest) // back open after one half-open failure
-  }
 
   test("health rules: lag, error rate, queue thresholds") {
     assert(isHealthy(HealthSnapshot(1000, 0.01, 0.5)))
